@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.bridge
 import org.apache.spark.scheduler._
 
 /** Job-level profiling harness for the optimization rounds: run one named
@@ -84,7 +85,8 @@ object ProfileOne {
       val t0 = System.nanoTime()
       val cpu0 = cpuNs.get(); val jobs0 = jobCount.get()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      Thread.sleep(150) // listener-bus drain so the CPU delta is honest
+      // every task-end of this rep reaches the listener before the CPU delta
+      bridge.drainListenerBus(spark.sparkContext)
       println(f"[profile] $name rep$i: ${(System.nanoTime() - t0) / 1e9}%.3f s " +
         f"cpu=${(cpuNs.get() - cpu0) / 1e9}%.2f s jobs=${jobCount.get() - jobs0}")
     }
@@ -93,7 +95,7 @@ object ProfileOne {
     samples.asScala.toSeq.sortBy(-_._2).take(15).foreach { case (f, n) =>
       println(f"[stack] $n%4d  $f")
     }
-    Thread.sleep(500) // let the listener bus drain
+    bridge.drainListenerBus(spark.sparkContext)
     spark.stop()
   }
 }

@@ -1,7 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** M2/M3/M4 — canonical content hashes and optimistic-concurrency gates.
@@ -66,18 +70,46 @@ object Etag {
       .withColumn("__key",
         concat_ws("_", col("objectType").cast("string"), col("objectId").cast("string")))
 
+  /** The tagged store a gate joins its requests against. `docs` may
+    * already carry `__key`/`__etag` (any self-consistent tagging scheme);
+    * otherwise the canonical [[withEtag]] is applied.
+    *
+    * A left outer join may only build its hash table on the store side.
+    * When the request table is driver-local (its optimized plan is a
+    * `LocalRelation`: an HTTP request, a `createDataFrame` of rows, a
+    * `Seq(...).toDF`), its keys are read from that relation on the driver
+    * and the store is cut to `__key IN (keys)` before the join, so the
+    * build side holds at most |requests| rows instead of the whole store.
+    * Null keys never match and are dropped. A distributed request table
+    * keeps the unrestricted plan. */
+  private def storeFor(docs: DataFrame, requests: DataFrame): DataFrame = {
+    val d = if (docs.columns.contains("__etag") && docs.columns.contains("__key")) docs
+      else withEtag(docs)
+    requests.queryExecution.optimizedPlan match {
+      case lr: LocalRelation =>
+        val i = lr.output.indexWhere(a => SQLConf.get.resolver(a.name, "key"))
+        if (i < 0) d // no key column: the join reports it
+        else {
+          val dt = lr.output(i).dataType
+          val keys = lr.data.filterNot(_.isNullAt(i)).map(_.get(i, dt)).distinct
+          d.where(d("__key").isin(keys.map(k => bridge.column(Literal(k, dt))): _*))
+        }
+      case _ => d
+    }
+  }
+
   /** M3 — batch conditional read (`If-None-Match`,
     * `apiLogicForCRUD.ts:76-78`): join read requests (key, ifNoneMatch)
     * against current docs; status 304 when the tag still matches, 404 when
-    * absent, else 200 with the document. Fully distributed — the HTTP
-    * point-read is just this with a single-row request table.
-    *
-    * `docs` may already carry `__key`/`__etag` (any self-consistent tagging
-    * scheme); otherwise the canonical [[withEtag]] is applied.
+    * absent, else 200 with the document. Two request shapes, one result:
+    * the HTTP point read is a driver-local request table, joined against
+    * the store cut to its keys ([[storeFor]]), so a read never broadcasts
+    * the whole store; a distributed request table (a batch of reads) joins
+    * the whole store, hash-partitioned or broadcast as the planner sees
+    * fit.
     */
   def conditionalRead(docs: DataFrame, requests: DataFrame): DataFrame = {
-    val d = if (docs.columns.contains("__etag") && docs.columns.contains("__key")) docs
-      else withEtag(docs)
+    val d = storeFor(docs, requests)
     requests.join(d, requests("key") === d("__key"), "left")
       .withColumn("status",
         when(col("__key").isNull, lit(404))
@@ -94,10 +126,10 @@ object Etag {
     * (write may proceed). An ABSENT If-Match (NULL) skips the gate and
     * proceeds — the reference's guard is
     * `if (clientEtag && clientEtag !== generatedEtag)`, so an
-    * unconditional PUT/DELETE was never rejected there. */
+    * unconditional PUT/DELETE was never rejected there. Request shapes as
+    * in [[conditionalRead]]. */
   def conditionalWrite(docs: DataFrame, requests: DataFrame): DataFrame = {
-    val d = if (docs.columns.contains("__etag") && docs.columns.contains("__key")) docs
-      else withEtag(docs)
+    val d = storeFor(docs, requests)
     requests.join(d.select(col("__key"), col("__etag")), requests("key") === col("__key"), "left")
       .withColumn("status",
         when(col("__key").isNull, lit(404))

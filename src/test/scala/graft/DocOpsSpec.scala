@@ -2,7 +2,7 @@ package graft
 
 import graft.functions.JsonSchema
 import graft.operators._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -295,6 +295,36 @@ class EtagSpec extends SparkSpec {
     assert(res(("plan_A", tag)) == 200)
     assert(res(("plan_A", "stale")) == 412)
     assert(res(("plan_Z", tag)) == 404)
+  }
+
+  test("gates answer a driver-local and a distributed request table identically") {
+    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+    import org.apache.spark.sql.types.{StringType, StructField}
+    val d = Etag.withEtag(docs(spark, Seq(
+      planJson("A", Seq(("1", "x", 1.0))), planJson("B", Seq(("2", "y", 2.0))))))
+    val tagA = d.where(col("__key") === "plan_A").select("__etag").head().getString(0)
+    // read: 304, 304 (duplicate key), 200 (stale), 200 (no tag), 404
+    // (absent key), 404 (null key, with and without a tag); as a write
+    // gate the same rows give 200, 200, 412, 200, 404, 404, 404
+    val rows = Seq(Row("plan_A", tagA), Row("plan_A", tagA), Row("plan_A", "stale"),
+      Row("plan_B", null), Row("plan_Z", "x"), Row(null, "x"), Row(null, null))
+    def requests(tagCol: String) = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(Seq(StructField("key", StringType), StructField(tagCol, StringType))))
+    def keyPruned(df: DataFrame) = df.queryExecution.analyzed.exists(_.expressions.exists(_.exists {
+      case i: In => i.value.references.exists(_.name == "__key")
+      case i: InSet => i.child.references.exists(_.name == "__key")
+      case _ => false
+    }))
+    def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    for ((gate, tagCol, want) <- Seq(
+        (Etag.conditionalRead _, "ifNoneMatch", Seq(304, 304, 200, 200, 404, 404, 404)),
+        (Etag.conditionalWrite _, "ifMatch", Seq(200, 200, 412, 200, 404, 404, 404)))) {
+      val local = gate(d, requests(tagCol))
+      val distributed = gate(d, requests(tagCol).repartition(2))
+      assert(keyPruned(local) && !keyPruned(distributed), s"$tagCol: plan shapes")
+      assert(local.collect().map(_.getAs[Int]("status")).sorted.toSeq == want.sorted, tagCol)
+      assert(sorted(local) == sorted(distributed), tagCol)
+    }
   }
 }
 

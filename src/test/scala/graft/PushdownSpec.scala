@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 
 /** Plan-shape assertions for the scan layer (SCALE.md "push down and
   * prune"): predicates reach the parquet scan as PushedFilters and
@@ -19,6 +21,18 @@ class PushdownSpec extends SparkSpec {
 
   private def scans(df: org.apache.spark.sql.DataFrame): Seq[FileSourceScanExec] =
     nodesIn[FileSourceScanExec](df.queryExecution.executedPlan)
+
+  /** Every node of a finalized adaptive plan, query stages and reused
+    * exchanges included. */
+  private def allNodes(p: SparkPlan): Seq[SparkPlan] = {
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case other => other.children
+    }
+    p +: kids.flatMap(allNodes)
+  }
 
   test("P1 conjunctive equality pushes both predicates into the scan") {
     val q = SparkEntry.queries("p1_conj_eq")(spark, sf)
@@ -54,21 +68,9 @@ class PushdownSpec extends SparkSpec {
 
   test("P10 filters before assembling: every collect_list aggregate has the semi-join upstream") {
     import org.apache.spark.sql.catalyst.plans.LeftSemi
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     val q = SparkEntry.queries("p10_search_renest")(spark, sf)
     q.collect() // finalize the adaptive plan before walking it
-    def allNodes(p: SparkPlan): Seq[SparkPlan] = {
-      val kids = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case s: QueryStageExec => Seq(s.plan)
-        case r: ReusedExchangeExec => Seq(r.child)
-        case other => other.children
-      }
-      p +: kids.flatMap(allNodes)
-    }
     val aggs = allNodes(q.queryExecution.executedPlan).filter(n =>
       n.expressions.exists(_.exists(
         _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.aggregate.CollectList])))
@@ -79,6 +81,39 @@ class PushdownSpec extends SparkSpec {
         case _ => false
       }, s"collect_list aggregate assembles unfiltered input (no semi-join below it):\n$a")
     }
+  }
+
+  test("ETag point read cuts the store to the requested key below every exchange") {
+    import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression, In, InSet}
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import spark.implicits._
+    val store = graft.operators.Etag.withEtag(graft.sources.StarDocs.docs(spark, sf)).persist()
+    try {
+      val key = store.select("__key").head().getString(0)
+      val q = graft.operators.Etag.conditionalRead(store,
+        Seq((key, null.asInstanceOf[String])).toDF("key", "ifNoneMatch"))
+      assert(q.collect().map(_.getAs[Int]("status")).toSeq == Seq(200))
+      def onKey(e: Expression) = e.references.exists(_.name == "__key")
+      def keyFilter(p: SparkPlan) = p match {
+        case f: FilterExec => f.condition.exists {
+          case i: In => onKey(i.value)
+          case i: InSet => onKey(i.child)
+          case EqualTo(l, r) => (onKey(l) && r.foldable) || (onKey(r) && l.foldable)
+          case _ => false
+        }
+        case _ => false
+      }
+      val plan = q.queryExecution.executedPlan
+      val storeExchanges = allNodes(plan).collect { case e: Exchange => e }
+        .filter(e => allNodes(e).exists(_.isInstanceOf[InMemoryTableScanExec]))
+      assert(storeExchanges.nonEmpty, s"expected an exchange over the store scan:\n$plan")
+      storeExchanges.foreach { e =>
+        assert(allNodes(e).exists(keyFilter),
+          s"${e.nodeName} over the store scan without a key filter below it:\n$plan")
+      }
+    } finally store.unpersist()
   }
 
   test("funnel pushes each step's event-type equality into its events scan") {
