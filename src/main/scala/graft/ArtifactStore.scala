@@ -17,8 +17,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Keying — what makes a stale read impossible:
   *  - the memo TAG (operator + parameters, length-prefixed collision-proof
   *    via [[PlanMemo.tag]]);
-  *  - the CANONICALIZED logical plan string + semantic hash of every
-  *    input relation (captures schema, expressions, literals, paths);
+  *  - the CANONICALIZED logical plan string + JVM-stable semantic hash
+  *    ([[planHash]]) of every input relation (captures schema,
+  *    expressions, literals, paths);
   *  - a FINGERPRINT of every underlying file: path, length, modification
   *    time — a regenerated fixture at the same path changes the key.
   *    CAVEAT: mtime resolution is filesystem-dependent (1 s on ext3/
@@ -141,44 +142,24 @@ object ArtifactStore {
       try sweep() catch { case _: Exception => () }
 
   // ---- chain-stable keying --------------------------------------------
-  // A derived artifact's input is often ITSELF an artifact. Hashing the
-  // input's CURRENT plan makes the downstream key session-dependent: the
-  // building JVM sees the computed plan, a fresh JVM sees the
-  // parquet-read-of-artifact plan, so chained artifacts (kmvItems over
-  // the shingle table, signature tables over shingles) could never
-  // disk-hit across the build/fault boundary — each fresh JVM re-paid
-  // one derivation per chain link. The registry below maps a served or
-  // just-built artifact's canonical plan to its CONTENT KEY; dfKey
-  // substitutes `artifact:<key>` for any registered input, making the
-  // downstream key identical in both JVMs. Entries are validated against
-  // the input's current leaf-file stats before use, so an in-place
-  // fixture regen within one JVM cannot serve a stale chain key.
+  // A derived artifact's input is often ITSELF an artifact. Every session
+  // holds it in one form, the parquet read of its committed entry (see
+  // getOrBuildDf), but hashing that read's plan and file stats would tie
+  // the downstream key to one commit's part files: an upstream entry
+  // evicted or self-healed and recommitted would re-key, and so rebuild,
+  // every artifact chained on it (kmvItems over the shingle table,
+  // signature tables over shingles). The registry below maps a served
+  // artifact's canonical plan to its CONTENT KEY; dfKey substitutes
+  // `artifact:<key>` for any registered input, so the downstream key
+  // names the upstream content, not its files. Only served reads are
+  // registered, never a memo's input, so a SELF-memoized artifact (memo
+  // input == build output, the co-purchase edge table) re-resolves the
+  // same key after a cache sweep. Entries are validated against the
+  // input's current leaf-file stats before use, so an in-place rewrite
+  // within one JVM cannot serve a stale chain key.
   private val artifactKeys = new java.util.concurrent.ConcurrentHashMap[
     org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
     (String, String)]() // canonical plan -> (content key, leaf fingerprint)
-
-  // ---- same-JVM key stability -----------------------------------------
-  // A SELF-memoized artifact (memo input == build output — the co-purchase
-  // edge table, the assembled-docs pattern) resolves its FIRST key from
-  // plan+stats, and then its own build registers the frame in
-  // artifactKeys. Every later resolution in the same JVM would take the
-  // `artifact:<key>` substitution instead and land on a DIFFERENT key —
-  // so a cache sweep between the build and the next request (exactly
-  // Bench's artifact-pass → timed-phase boundary) re-derived the artifact
-  // and, worse, every artifact chained on it (round 13: x_pagerank_delta's
-  // 21 s "cold rep" was the base-rank chain rebuilding under a drifted
-  // key, not the refresh under test). The pin below maps the RAW digest
-  // (tag + canonical plans + leaf stats, no substitution — deterministic
-  // for a reconstructed plan) to the first resolved final key, so a JVM
-  // always re-resolves the same key. Staleness is impossible: the raw
-  // digest includes every leaf file's length+mtime, so a fixture regen
-  // changes the raw digest and the pin simply never matches again. A
-  // fresh JVM either reconstructs the same computed plan (same raw digest
-  // → same first-resolution key) or holds the parquet-read form of the
-  // artifact (registered at read → substitution path) — both land on the
-  // committed key, so cross-JVM behavior is unchanged.
-  private val resolvedKeys =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Sorted `path|len|mtime` stats of every file under the plan's leaf
     * relations — the freshness component of every content key. Throws on
@@ -218,6 +199,31 @@ object ArtifactStore {
       (key, fingerprint(leafStats(df))))
     catch { case _: Exception => () }
 
+  /** Catalyst's semantic hash of a canonical plan, minus the parts that
+    * hash a `Class` object, whose identity hash differs from JVM to JVM
+    * (a fresh JVM then misses every entry an earlier one committed): a
+    * file scan hashes its FileFormat, which ParquetFileFormat does as
+    * `getClass.hashCode`, and canonicalization folds And/Or/Add chains
+    * into a `MultiCommutativeOp` holding the operator's Class. File scans
+    * are hashed here by what defines their rows instead (output, root
+    * paths, schemas, bucketing, options, format class name; their files'
+    * stats are a separate key part), and a folded chain by its operator's
+    * class name, eval context and operands. */
+  private def planHash(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): String = {
+    import org.apache.spark.sql.catalyst.expressions.{CreateArray, Literal, MultiCommutativeOp}
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val scans = plan.collect { case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+      Seq(fs.location.rootPaths.mkString(","), fs.dataSchema.json, fs.partitionSchema.json,
+        fs.bucketSpec, fs.options, fs.fileFormat.getClass.getName).mkString("|")
+    }
+    val stable = plan.transform { case lr @ LogicalRelation(_: HadoopFsRelation, _, _, _, _) =>
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation(lr.output)
+    }.transformAllExpressions { case m: MultiCommutativeOp =>
+      CreateArray(Literal(s"${m.opCls.getName}|${m.evalContext}") +: m.operands)
+    }
+    (stable.hashCode +: scans).mkString("\n")
+  }
+
   /** Content key for a derived relation: tag + per input either the
     * input's own ARTIFACT key (chain-stable, see [[artifactKeys]]) or
     * its canonical plan + underlying-file stats. Returns None when any
@@ -228,43 +234,33 @@ object ArtifactStore {
     // memo miss in the (store-off) test suite would otherwise pay it
     // just for getOrBuildDf/getOrTrain to discard the key
     if (!enabled) return None
-    val rawMd = java.security.MessageDigest.getInstance("MD5")
-    val subMd = java.security.MessageDigest.getInstance("MD5")
-    def upd(m: java.security.MessageDigest, s: String): Unit = {
-      m.update(s.getBytes("UTF-8")); m.update(0.toByte)
-    }
-    Seq(rawMd, subMd).foreach { m => upd(m, CodeSalt); upd(m, tag) }
+    val md = java.security.MessageDigest.getInstance("MD5")
+    def upd(s: String): Unit = { md.update(s.getBytes("UTF-8")); md.update(0.toByte) }
+    upd(CodeSalt); upd(tag)
     try {
       inputs.foreach { df =>
         val stats = leafStats(df)
-        val plan = df.queryExecution.analyzed
-        // raw digest: always plan+stats — the substitution-free identity
-        // of this request, stable across re-resolutions within a JVM
-        upd(rawMd, plan.canonicalized.toString)
-        upd(rawMd, plan.semanticHash().toString)
-        stats.foreach(upd(rawMd, _))
-        artifactKeys.get(plan.canonicalized) match {
-          case (k, fp) if fp == fingerprint(stats) => upd(subMd, s"artifact:$k")
+        val plan = df.queryExecution.analyzed.canonicalized
+        artifactKeys.get(plan) match {
+          case (k, fp) if fp == fingerprint(stats) => upd(s"artifact:$k")
           case _ =>
-            upd(subMd, plan.canonicalized.toString)
-            upd(subMd, plan.semanticHash().toString)
-            stats.foreach(upd(subMd, _))
+            upd(plan.toString)
+            upd(planHash(plan))
+            stats.foreach(upd)
         }
       }
-      val raw = rawMd.digest().map("%02x".format(_)).mkString
-      val sub = subMd.digest().map("%02x".format(_)).mkString
-      // first resolution for this raw identity wins and is pinned — see
-      // the resolvedKeys note above
-      resolvedKeys.putIfAbsent(raw, sub)
-      Some(resolvedKeys.get(raw))
+      Some(md.digest().map("%02x".format(_)).mkString)
     } catch { case _: Exception => None }
   }
 
   /** Load the relation for `key` if a committed artifact exists, else
-    * build it and commit it. The BUILD path returns the builder's own
-    * frame (plan shapes within the building session are unchanged); only
-    * a later session reads the parquet-backed form — which is exactly
-    * the stored-table behavior at scale. */
+    * build it, commit it, and serve the committed entry. Either way the
+    * caller gets ONE plan form: a parquet read of `df_<key>`, the frame a
+    * fresh JVM faults in. So the builder's plan executes once (for the
+    * parquet write), and every relation over the artifact (caches, point
+    * reads, searches) plans over a single scan leaf instead of the whole
+    * derivation. The builder's own frame comes back only when the commit
+    * or the read-back fails, counted in [[degradeEvents]]. */
   def getOrBuildDf(spark: SparkSession, key: Option[String])
                   (build: => DataFrame): DataFrame =
     key.filter(_ => enabled) match {
@@ -272,12 +268,15 @@ object ArtifactStore {
       case Some(k) =>
         sweepIfFirst()
         val dir = root.resolve(s"df_$k")
+        // touch only AFTER the read validates (the schema/footer pass
+        // runs eagerly here): touching first would TTL-refresh a corrupt
+        // entry on every attempt, making it immortal
+        def serve(): DataFrame = {
+          val df = spark.read.parquet(dir.toString)
+          touch(dir); register(df, k); df
+        }
         if (java.nio.file.Files.exists(dir.resolve("_SUCCESS")))
-          // touch only AFTER the read validates (the schema/footer pass
-          // runs eagerly here): touching first would TTL-refresh a
-          // corrupt entry on every attempt, making it immortal
-          try { val df = spark.read.parquet(dir.toString); touch(dir)
-                register(df, k); return df }
+          try return serve()
           catch { case _: Exception =>
             // unreadable artifact: remove it so the rebuild's atomic
             // rename can land — leaving it would fail every future
@@ -295,12 +294,8 @@ object ArtifactStore {
           catch { case _: Exception => // lost the race or target exists: adopt
             org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile); ()
           }
-        } catch { case _: Exception => degradeEvents.incrementAndGet() }
-        // register the BUILT form too: the building session hands this
-        // computed frame to downstream memos, whose keys must agree with
-        // the parquet-read form a fresh JVM will hand them
-        register(built, k)
-        built
+          serve()
+        } catch { case _: Exception => degradeEvents.incrementAndGet(); built }
     }
 
   /** Model (driver-metadata) variant: java-serialized blob per key. */

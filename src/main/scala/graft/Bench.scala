@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.bridge
 object Bench {
   /** Median of a rep set; any failed rep (-1) poisons the whole set to -1
     * so a flaky query can never masquerade as a fast one. Package-visible
@@ -237,9 +238,10 @@ object Bench {
     Caches.invalidate(spark)
     val artifactSecs = (System.nanoTime() - tArt) / 1e9
     // deliberate unpersists from Caches.invalidate also post removal
-    // events — rebase the counter after them so the timed phase starts
-    // near zero (listener delivery is async; the rebase is best-effort)
-    Thread.sleep(200); val evictedBase = evictedBlocks.get()
+    // events — drain the (async) listener bus, then rebase the counter
+    // so the timed phase starts from zero
+    bridge.drainListenerBus(spark.sparkContext)
+    val evictedBase = evictedBlocks.get()
     val gcArtMs = gcMillis() - gcArtStart
     val gcTimedStart = gcMillis()
     val tTimed = System.nanoTime()

@@ -35,7 +35,9 @@ final class PlanMemo {
     * Disk layer: a memory miss first consults [[ArtifactStore]] under a
     * (tag, input plan, input files) content key — a fresh JVM faults the
     * stored artifact in from parquet instead of re-deriving it, and a
-    * first build commits its result for the next JVM. */
+    * first build commits its result and holds the committed parquet read,
+    * the same frame the next JVM faults in (so what is persisted here is
+    * a scan of the stored relation, not its derivation). */
   def apply(input: DataFrame, tag: String)(build: => DataFrame): DataFrame =
     synchronized {
       val key = (input.sparkSession, input.queryExecution.analyzed.canonicalized, tag)

@@ -16,9 +16,24 @@ BENCH_SF="${2:-/root/testdata/sf0.1}"
 echo "== unit/property suite =="
 sbt -batch test
 
-echo "== oracle gate (Verify + DuckDB diff at $VERIFY_SF) =="
-sbt -batch "runMain graft.Verify $VERIFY_SF /tmp/graft_verify"
-python3 tools/diffcheck.py "$VERIFY_SF" /tmp/graft_verify
+# Twice against one fresh artifact store: the cold pass builds every
+# artifact and serves its committed read-back, the warm pass faults every
+# artifact in. Both must pass the diff, and the warm pass must commit no
+# new entry (one would mean a content key differs from JVM to JVM).
+echo "== oracle gate (Verify + DuckDB diff at $VERIFY_SF, cold then warm store) =="
+STORE="$(mktemp -d -t graft_verify_store.XXXXXX)"
+for pass in cold warm; do
+  GRAFT_ARTIFACT_DIR="$STORE" sbt -batch "runMain graft.Verify $VERIFY_SF /tmp/graft_verify_$pass"
+  python3 tools/diffcheck.py "$VERIFY_SF" "/tmp/graft_verify_$pass"
+  entries="$(find "$STORE" -maxdepth 1 \( -name 'df_*' -o -name 'model_*' \) | wc -l)"
+  echo "$pass pass: $entries stored artifacts"
+  if [ "$pass" = cold ]; then cold_entries="$entries"
+  elif [ "$entries" != "$cold_entries" ]; then
+    echo "warm pass committed $((entries - cold_entries)) new artifacts: a key drifted" >&2
+    exit 1
+  fi
+done
+rm -rf "$STORE"
 
 echo "== 10x scale soak (SoakSpec) =="
 sbt -batch 'set Test/testOptions := Seq(); testOnly graft.SoakSpec -- -n graft.Soak'
