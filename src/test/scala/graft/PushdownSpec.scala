@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.graft.bridge
 
 /** Plan-shape assertions for the scan layer (SCALE.md "push down and
   * prune"): predicates reach the parquet scan as PushedFilters and
@@ -80,6 +81,86 @@ class PushdownSpec extends SparkSpec {
         case j: BaseJoinExec => j.joinType == LeftSemi
         case _ => false
       }, s"collect_list aggregate assembles unfiltered input (no semi-join below it):\n$a")
+    }
+  }
+
+  test("P10 computes the hit set once: every node path semi-joins a driver-local build") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.{LocalTableScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{ShuffleExchangeExec, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.collection.mutable
+    // every plan the search executes (the hit-set probe included), and
+    // the stages that ran, with the job that first listed each
+    val executed = mutable.Buffer[QueryExecution]()
+    val stageJob = mutable.Map[Int, Int]()
+    val ranStages = mutable.Buffer[(Int, Set[Int])]() // (stage id, its RDD ids)
+    val qel = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = synchronized(executed += qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val sl = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
+        j.stageIds.foreach(stageJob.getOrElseUpdate(_, j.jobId))
+      }
+      override def onStageCompleted(c: SparkListenerStageCompleted): Unit = synchronized {
+        ranStages += ((c.stageInfo.stageId, c.stageInfo.rddInfos.map(_.id).toSet))
+      }
+    }
+    // the child-key aggregate is the one grouping on the child's parent
+    // key alone with no aggregate function (the renest's collect_lists
+    // group on it too, with one); its map stage is the one computing the
+    // exchange's input RDD
+    def childKeyMapRdds(p: SparkPlan): Set[Int] = allNodes(p).collect {
+      case e: ShuffleExchangeExec if allNodes(e.child).exists {
+        case a: BaseAggregateExec => a.aggregateExpressions.isEmpty &&
+          a.groupingExpressions.flatMap(_.references.map(_.name)) == Seq("__parentKey")
+        case _ => false
+      } => e.shuffleDependency.rdd.id
+    }.toSet
+    def search(): (org.apache.spark.sql.DataFrame, Int) = {
+      bridge.drainListenerBus(spark.sparkContext)
+      synchronized { executed.clear(); ranStages.clear() }
+      val q = SparkEntry.queries("p10_search_renest")(spark, sf)
+      assert(q.collect().nonEmpty)
+      bridge.drainListenerBus(spark.sparkContext)
+      synchronized {
+        val rdds = executed.toSeq.flatMap(qe => childKeyMapRdds(qe.executedPlan)).toSet
+        assert(rdds.nonEmpty, "no executed plan aggregated the child keys")
+        (q, ranStages.collect { case (st, ids) if (ids & rdds).nonEmpty => stageJob(st) }
+          .distinct.size)
+      }
+    }
+    spark.listenerManager.register(qel)
+    spark.sparkContext.addSparkListener(sl)
+    try {
+      val paths = graft.operators.Shred.shredTyped(
+        graft.sources.StarDocs.docs(spark, sf)).size
+      // the hit set is driver-local once the node cache is filled: a
+      // first search fills it, the next two are pinned
+      search()
+      Seq("first", "second").foreach { pass =>
+        val (q, jobs) = search()
+        val plan = q.queryExecution.executedPlan
+        val semis = allNodes(plan).collect { case j: BaseJoinExec if j.joinType == LeftSemi => j }
+        assert(semis.size == paths, s"$pass: expected one semi-join per node path:\n$plan")
+        semis.foreach { j =>
+          assert(j.isInstanceOf[BroadcastHashJoinExec], s"$pass: not a broadcast semi-join:\n$j")
+          val build = allNodes(j.right)
+          assert(build.exists(_.isInstanceOf[LocalTableScanExec]) &&
+            !build.exists(n => n.isInstanceOf[InMemoryTableScanExec] ||
+              n.isInstanceOf[ShuffleExchangeLike]),
+            s"$pass: the hit-set build side is not driver-local:\n$j")
+        }
+        assert(jobs == 1, s"$pass: the child-key aggregate ran in $jobs jobs")
+      }
+    } finally {
+      spark.sparkContext.removeSparkListener(sl)
+      spark.listenerManager.unregister(qel)
     }
   }
 

@@ -266,4 +266,57 @@ class SkewSpec extends SparkSpec {
       }
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
   }
+
+  test("has_child returns the same rows driver-local and distributed") {
+    // the driver-local path (in-memory inputs within the broadcast
+    // budget) collects the semi-join once and returns a LocalRelation;
+    // every other input keeps the lazy plan. Both must agree row for row
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation, LogicalPlan}
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    import graft.operators.Search
+    import spark.implicits._
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val parents = Seq(("a", 1), ("b", 2), ("c", 3), ("d", 4)).toDF("pk", "v")
+    // duplicated keys, null keys, a key with no parent
+    val children = Seq[(String, Double)](("a", 5.0), ("a", 6.0), ("a", 7.0),
+      (null, 9.0), ("c", 8.0), ("z", 9.0), (null, 1.0)).toDF("cpk", "x")
+    def run(budget: String, p: DataFrame, c: DataFrame): (LogicalPlan, Seq[(String, Int)]) =
+      withSQLConf(threshold -> budget) {
+        val q = Search.hasChild(p, c, "pk", "cpk")
+        assert(q.schema == p.schema)
+        (q.queryExecution.analyzed,
+          q.collect().map(r => (r.getString(0), r.getInt(1))).toSeq.sorted)
+      }
+    def isLocal(plan: LogicalPlan) = plan.isInstanceOf[LocalRelation]
+    def isLazy(plan: LogicalPlan) = plan.exists(_.isInstanceOf[Join])
+    def agree(p: DataFrame, c: DataFrame, want: Seq[(String, Int)]): Unit = {
+      val (local, localRows) = run("10MB", p, c)
+      val (dist, distRows) = run("-1", p, c)
+      assert(isLocal(local), s"expected a driver-local result:\n$local")
+      assert(isLazy(dist), s"expected the lazy semi-join:\n$dist")
+      assert(localRows == want && distRows == want, s"$localRows / $distRows, want $want")
+    }
+    agree(parents, children, Seq(("a", 1), ("c", 3)))
+    // an empty hit set
+    agree(parents, children.where($"x" > 100), Nil)
+    // loaded caches are in memory too
+    val cachedParents = parents.union(Seq(("e", 5)).toDF("pk", "v")).persist()
+    val cachedChildren = children.union(Seq(("e", 1.0)).toDF("cpk", "x")).persist()
+    try {
+      // not yet filled: the probe would read the cache's inputs, so lazy
+      assert(isLazy(run("10MB", cachedParents, cachedChildren)._1))
+      cachedParents.count(); cachedChildren.count()
+      agree(cachedParents, cachedChildren, Seq(("a", 1), ("c", 3), ("e", 5)))
+    } finally { cachedParents.unpersist(); cachedChildren.unpersist() }
+    // parents over the budget keep the lazy plan
+    val (over, overRows) = run("1", parents, children)
+    assert(isLazy(over) && overRows == Seq(("a", 1), ("c", 3)), over)
+    // a parquet-backed input keeps the lazy plan and its scan
+    val dir = java.nio.file.Files.createTempDirectory("graft_has_child").toString
+    parents.write.mode("overwrite").parquet(dir)
+    val (fromFiles, fileRows) = run("10MB", spark.read.parquet(dir), children)
+    assert(isLazy(fromFiles) && fromFiles.exists(_.isInstanceOf[LogicalRelation]), fromFiles)
+    assert(fileRows == Seq(("a", 1), ("c", 3)))
+  }
 }
