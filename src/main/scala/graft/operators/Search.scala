@@ -1,8 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 
 /** P1–P10 — the reference's search surface re-expressed as joins/filters.
@@ -71,22 +69,24 @@ object Search {
     * otherwise BE the hot key. SkewSpec pins shape and output.
     *
     * Two paths return the same rows under the same schema:
-    *  - driver-local: when every leaf of both inputs' optimized plans is
-    *    a `LocalRelation` or a loaded `InMemoryRelation`, and the
-    *    parents' size (exact: a loaded cache reports its materialized
-    *    bytes) is within the session's `spark.sql.autoBroadcastJoinThreshold`
-    *    (`-1` disables it), the semi-join runs once, here, and its rows
-    *    come back as a `LocalRelation`. A search that semi-joins every
-    *    node path against the hit set (the `doc_read` search,
-    *    `p10_search_renest`) then broadcasts a `LocalTableScan` per path,
-    *    which runs no job, instead of re-running this subtree once per
-    *    path: under AQE no exchange above a cached relation is reused
-    *    (`TableCacheQueryStageExec` has no `doCanonicalize`). The gate
-    *    keeps the eager probe to memory reads, re-reading no file, and
-    *    its result to what the session would broadcast anyway.
-    *  - lazy: any other input (a file scan, a range, a cache not yet
-    *    filled, a relation over the budget) gets the plan itself, so a
-    *    100 TB caller is charged nothing at call time. */
+    *  - driver-local: when both inputs are in memory and the parents'
+    *    size (exact: a loaded cache reports its materialized bytes) is
+    *    within the broadcast budget ([[DriverLocal]]), the semi-join runs
+    *    once, here, and its rows come back as a `LocalRelation`. A search
+    *    that semi-joins every node path against the hit set (the
+    *    `doc_read` search, `p10_search_renest`) then broadcasts one
+    *    `LocalTableScan` instead of re-running this subtree once per path:
+    *    under AQE no exchange above a cached relation is reused
+    *    (`TableCacheQueryStageExec` has no `doCanonicalize`). That
+    *    broadcast is not free: `BroadcastExchangeExec` collects its child
+    *    through `executeCollectIterator`, which `LocalTableScanExec` does
+    *    not override, so it runs one job, shared by every path of the
+    *    query. Measured on Spark 4.1.2 over loaded node caches, a search
+    *    runs 6 jobs: 3 here (the child-key aggregate's shuffle map stage,
+    *    the broadcast of its distinct keys, the semi-join's collect) and 3
+    *    in the renest's collect (the hit-set broadcast, the renest's
+    *    shuffle map stage, its result stage).
+    *  - lazy: any other input gets the plan itself. */
   def hasChild(parents: DataFrame, filteredChildren: DataFrame,
                parentKey: String, childParentKey: String): DataFrame = {
     val childKeys = filteredChildren
@@ -95,22 +95,8 @@ object Search {
       .distinct()
     val semi = parents.alias("__p").join(childKeys.alias("__c"),
       col(s"__p.$parentKey") === col(s"__c.$childParentKey"), "left_semi")
-    if (!inMemoryWithinBroadcast(semi)) semi
-    else parents.sparkSession.createDataFrame(semi.collectAsList(), semi.schema)
-  }
-
-  /** The driver-local gate of [[hasChild]], read off the semi-join's own
-    * optimized plan (the one its collect runs): every leaf is local rows
-    * or a loaded cache, and its size, which for a semi-join is its
-    * parents', is within the broadcast budget. */
-  private def inMemoryWithinBroadcast(semi: DataFrame): Boolean = {
-    val plan = semi.queryExecution.optimizedPlan
-    val budget = semi.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    budget >= 0 && plan.collectLeaves().forall {
-      case r: InMemoryRelation => r.cacheBuilder.isCachedColumnBuffersLoaded
-      case _: LocalRelation => true
-      case _ => false
-    } && plan.stats.sizeInBytes <= budget
+    // a semi-join's size estimate is its parents'
+    DriverLocal.relation(semi, semi.queryExecution.optimizedPlan.stats.sizeInBytes).getOrElse(semi)
   }
 
   /** P6 — `has_parent` (the reference *attempted* this and kept the failed

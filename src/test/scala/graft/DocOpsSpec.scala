@@ -299,10 +299,13 @@ class EtagSpec extends SparkSpec {
 
   test("gates answer a driver-local and a distributed request table identically") {
     import org.apache.spark.sql.catalyst.expressions.{In, InSet}
-    import org.apache.spark.sql.types.{StringType, StructField}
-    val d = Etag.withEtag(docs(spark, Seq(
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation}
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    import org.apache.spark.sql.types.{LongType, StringType, StructField}
+    import spark.implicits._
+    val tagged = Etag.withEtag(docs(spark, Seq(
       planJson("A", Seq(("1", "x", 1.0))), planJson("B", Seq(("2", "y", 2.0))))))
-    val tagA = d.where(col("__key") === "plan_A").select("__etag").head().getString(0)
+    val tagA = tagged.where(col("__key") === "plan_A").select("__etag").head().getString(0)
     // read: 304, 304 (duplicate key), 200 (stale), 200 (no tag), 404
     // (absent key), 404 (null key, with and without a tag); as a write
     // gate the same rows give 200, 200, 412, 200, 404, 404, 404
@@ -310,20 +313,117 @@ class EtagSpec extends SparkSpec {
       Row("plan_B", null), Row("plan_Z", "x"), Row(null, "x"), Row(null, null))
     def requests(tagCol: String) = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
       StructType(Seq(StructField("key", StringType), StructField(tagCol, StringType))))
+    def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def isLazy(df: DataFrame) = df.queryExecution.analyzed.exists(_.isInstanceOf[Join])
     def keyPruned(df: DataFrame) = df.queryExecution.analyzed.exists(_.expressions.exists(_.exists {
       case i: In => i.value.references.exists(_.name == "__key")
       case i: InSet => i.child.references.exists(_.name == "__key")
       case _ => false
     }))
-    def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
-    for ((gate, tagCol, want) <- Seq(
-        (Etag.conditionalRead _, "ifNoneMatch", Seq(304, 304, 200, 200, 404, 404, 404)),
-        (Etag.conditionalWrite _, "ifMatch", Seq(200, 200, 412, 200, 404, 404, 404)))) {
-      val local = gate(d, requests(tagCol))
-      val distributed = gate(d, requests(tagCol).repartition(2))
-      assert(keyPruned(local) && !keyPruned(distributed), s"$tagCol: plan shapes")
-      assert(local.collect().map(_.getAs[Int]("status")).sorted.toSeq == want.sorted, tagCol)
-      assert(sorted(local) == sorted(distributed), tagCol)
+    val gates = Seq(
+      (Etag.conditionalRead _, "ifNoneMatch", Seq(304, 304, 200, 200, 404, 404, 404)),
+      (Etag.conditionalWrite _, "ifMatch", Seq(200, 200, 412, 200, 404, 404, 404)))
+    val store = tagged.persist()
+    try {
+      store.count()
+      for ((gate, tagCol, want) <- gates) {
+        // a loaded store: the gate runs one job (the key-cut store's
+        // collect), its answer is one LocalRelation and collecting it runs none
+        val (local, gateJobs) = withJobCount(gate(store, requests(tagCol)))
+        assert(gateJobs == 1, s"$tagCol: the gate call ran $gateJobs jobs")
+        assert(local.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+          s"$tagCol:\n${local.queryExecution.optimizedPlan}")
+        val (localRows, collectJobs) = withJobCount(sorted(local))
+        assert(collectJobs == 0, s"$tagCol: collecting the answer ran $collectJobs jobs")
+        val distributed = gate(store, requests(tagCol).repartition(2))
+        assert(isLazy(distributed), tagCol)
+        // LifecycleSpec reads gate columns by position
+        assert(local.schema == distributed.schema, tagCol)
+        assert(local.collect().map(_.getAs[Int]("status")).sorted.toSeq == want.sorted, tagCol)
+        assert(localRows == sorted(distributed), tagCol)
+      }
+    } finally store.unpersist()
+
+    // every other shape keeps the lazy plan over the key-cut store (the
+    // distributed request joins the whole store) and answers as the
+    // distributed one; both gates are planned before either runs, since
+    // running one fills an unfilled cache
+    def fallsBack(what: String, s: DataFrame, reqs: String => DataFrame): Unit = {
+      val answers = gates.map { case (gate, tagCol, _) =>
+        (s"$what/$tagCol", gate(s, reqs(tagCol)), gate(s, reqs(tagCol).repartition(2)))
+      }
+      answers.foreach { case (at, local, distributed) =>
+        assert(isLazy(local), s"$at: expected the lazy plan:\n${local.queryExecution.analyzed}")
+        assert(keyPruned(local) && !keyPruned(distributed), s"$at: key cut")
+        assert(local.schema == distributed.schema, at)
+      }
+      answers.foreach { case (at, local, distributed) =>
+        assert(sorted(local) == sorted(distributed), at)
+      }
+    }
+    val unfilled = tagged.persist()
+    try fallsBack("unfilled cache", unfilled, requests) finally unfilled.unpersist()
+    val dir = java.nio.file.Files.createTempDirectory("graft_etag_store").toString
+    tagged.write.mode("overwrite").parquet(dir)
+    val fromFiles = spark.read.parquet(dir)
+    fallsBack("parquet store", fromFiles, requests)
+    assert(Etag.conditionalRead(fromFiles, requests("ifNoneMatch"))
+      .queryExecution.analyzed.exists(_.isInstanceOf[LogicalRelation]), "parquet scan kept")
+    val cached = tagged.persist()
+    try {
+      cached.count()
+      for (budget <- Seq("-1", "1"))
+        withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> budget) {
+          fallsBack(s"budget $budget", cached, requests)
+        }
+      // a long request key against the string __key: the join casts, and
+      // the driver-local join matches string keys only
+      val numbered = Seq(("1", "t1"), ("2", "t2")).toDF("__key", "__etag").persist()
+      try {
+        numbered.count()
+        fallsBack("long key", numbered, tagCol => spark.createDataFrame(
+          java.util.Arrays.asList(Row(1L, "t1"), Row(2L, "x"), Row(3L, null), Row(null, "t1")),
+          StructType(Seq(StructField("key", LongType), StructField(tagCol, StringType)))))
+      } finally numbered.unpersist()
+    } finally cached.unpersist()
+    // requests well within the budget whose key-cut rows are not: the
+    // collect passes the budget and the gate takes the lazy plan
+    val bulky = Seq(("k1", "a" * 5000), ("k2", "b" * 5000), ("k2", "c" * 5000))
+      .toDF("__key", "__etag").persist()
+    try {
+      bulky.count()
+      withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "4096") {
+        fallsBack("bulky rows", bulky, tagCol => spark.createDataFrame(
+          java.util.Arrays.asList(Row("k1", "a" * 5000), Row("k2", "x"), Row("k3", null)),
+          StructType(Seq(StructField("key", StringType), StructField(tagCol, StringType)))))
+      }
+    } finally bulky.unpersist()
+  }
+
+  test("m3/m4 request mixes answer driver-local as the distributed entries do") {
+    // the entries' own request and tagged relations (the two sides of
+    // their join), with the requests collected to a driver-local table and
+    // the tagged relation a loaded cache: the driver-local path over
+    // oracle-checked input
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation}
+    import org.apache.spark.sql.graft.bridge
+    def sorted(df: DataFrame) = df.collect().map(r => (r.getString(0), r.getInt(1))).sorted.toSeq
+    for ((entry, gate, absent) <- Seq(
+        ("m3_if_none_match", Etag.conditionalRead _, 0),
+        ("m4_if_match", Etag.conditionalWrite _, 5))) {
+      val q = SparkEntry.queries(entry)(spark, sf)
+      val want = sorted(q)
+      assert(want.map(_._2).toSet.size > 1 && want.count(_._2 == 404) == absent, entry)
+      val j = q.queryExecution.analyzed.collectFirst { case j: Join => j }.get
+      val reqs = bridge.frame(spark, j.left)
+      val local = spark.createDataFrame(reqs.collectAsList(), reqs.schema)
+      val store = bridge.frame(spark, j.right).persist()
+      try {
+        store.count()
+        val res = gate(store, local).select("key", "status")
+        assert(res.queryExecution.optimizedPlan.isInstanceOf[LocalRelation], entry)
+        assert(sorted(res) == want, entry)
+      } finally store.unpersist()
     }
   }
 }

@@ -165,17 +165,33 @@ class PushdownSpec extends SparkSpec {
   }
 
   test("ETag point read cuts the store to the requested key below every exchange") {
+    // a point read over a loaded store runs one job, the key-cut store's
+    // collect, with no exchange at all; the caller's collect runs none
     import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression, In, InSet}
-    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.{FilterExec, LocalTableScanExec, QueryExecution}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.collection.mutable
     import spark.implicits._
     val store = graft.operators.Etag.withEtag(graft.sources.StarDocs.docs(spark, sf)).persist()
+    val executed = mutable.Buffer[QueryExecution]()
+    val qel = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = synchronized(executed += qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
     try {
+      store.count() // a loaded store, as a served one is
       val key = store.select("__key").head().getString(0)
-      val q = graft.operators.Etag.conditionalRead(store,
-        Seq((key, null.asInstanceOf[String])).toDF("key", "ifNoneMatch"))
-      assert(q.collect().map(_.getAs[Int]("status")).toSeq == Seq(200))
+      bridge.drainListenerBus(spark.sparkContext) // report only the read's executions
+      spark.listenerManager.register(qel)
+      val ((q, statuses), jobs) = withJobCount {
+        val q = graft.operators.Etag.conditionalRead(store,
+          Seq((key, null.asInstanceOf[String])).toDF("key", "ifNoneMatch"))
+        (q, q.collect().map(_.getAs[Int]("status")).toSeq)
+      }
+      assert(statuses == Seq(200))
+      assert(jobs == 1, s"the point read ran $jobs jobs")
       def onKey(e: Expression) = e.references.exists(_.name == "__key")
       def keyFilter(p: SparkPlan) = p match {
         case f: FilterExec => f.condition.exists {
@@ -186,15 +202,64 @@ class PushdownSpec extends SparkSpec {
         }
         case _ => false
       }
-      val plan = q.queryExecution.executedPlan
-      val storeExchanges = allNodes(plan).collect { case e: Exchange => e }
-        .filter(e => allNodes(e).exists(_.isInstanceOf[InMemoryTableScanExec]))
-      assert(storeExchanges.nonEmpty, s"expected an exchange over the store scan:\n$plan")
-      storeExchanges.foreach { e =>
-        assert(allNodes(e).exists(keyFilter),
-          s"${e.nodeName} over the store scan without a key filter below it:\n$plan")
+      val plans = synchronized(executed.toSeq).map(_.executedPlan)
+      assert(plans.nonEmpty, "no execution was reported")
+      plans.foreach { p =>
+        assert(!allNodes(p).exists(_.isInstanceOf[Exchange]), s"an exchange in a point read:\n$p")
       }
-    } finally store.unpersist()
+      val scans = plans.flatMap(allNodes).collect { case s: InMemoryTableScanExec => s }
+      assert(scans.size == 1, s"expected one store scan, got ${scans.size}:\n${plans.mkString("\n")}")
+      assert(plans.flatMap(allNodes).exists(f => keyFilter(f) && allNodes(f).contains(scans.head)),
+        s"the store scan is not under a key filter:\n${plans.mkString("\n")}")
+      assert(q.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec],
+        s"the answer does not execute as a LocalTableScan:\n${q.queryExecution.executedPlan}")
+    } finally {
+      spark.listenerManager.unregister(qel)
+      store.unpersist()
+    }
+  }
+
+  test("ETag point read over a store not in memory cuts it to the requested key below every exchange") {
+    // a parquet-backed store and a cache not yet filled keep the lazy
+    // join, over the key-cut store: every exchange over the store scan
+    // has a key filter below it, so no exchange carries the whole store
+    import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression, In, InSet}
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import spark.implicits._
+    val tagged = graft.operators.Etag.withEtag(graft.sources.StarDocs.docs(spark, sf))
+    val key = tagged.select("__key").head().getString(0)
+    val dir = java.nio.file.Files.createTempDirectory("graft_etag_pushdown").toString
+    tagged.write.mode("overwrite").parquet(dir)
+    def onKey(e: Expression) = e.references.exists(_.name == "__key")
+    def keyFilter(p: SparkPlan) = p match {
+      case f: FilterExec => f.condition.exists {
+        case i: In => onKey(i.value)
+        case i: InSet => onKey(i.child)
+        case EqualTo(l, r) => onKey(l) || onKey(r)
+        case _ => false
+      }
+      case _ => false
+    }
+    def storeScan(p: SparkPlan) =
+      p.isInstanceOf[InMemoryTableScanExec] || p.isInstanceOf[FileSourceScanExec]
+    val unfilled = tagged.persist()
+    try {
+      for ((what, store) <- Seq("parquet store" -> spark.read.parquet(dir), "unfilled cache" -> unfilled)) {
+        val q = graft.operators.Etag.conditionalRead(store,
+          Seq((key, null.asInstanceOf[String])).toDF("key", "ifNoneMatch"))
+        assert(q.collect().map(_.getAs[Int]("status")).toSeq == Seq(200), what)
+        val plan = q.queryExecution.executedPlan
+        val storeExchanges = allNodes(plan).collect { case e: Exchange => e }
+          .filter(e => allNodes(e).exists(storeScan))
+        assert(storeExchanges.nonEmpty, s"$what: expected an exchange over the store scan:\n$plan")
+        storeExchanges.foreach { e =>
+          assert(allNodes(e).exists(keyFilter),
+            s"$what: ${e.nodeName} over the store scan without a key filter below it:\n$plan")
+        }
+      }
+    } finally unfilled.unpersist()
   }
 
   test("funnel pushes each step's event-type equality into its events scan") {

@@ -38,6 +38,24 @@ abstract class SparkSpec extends AnyFunSuite {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** Runs `body`; returns its value and the number of Spark jobs started
+    * meanwhile (listener bus drained on both ends). */
+  def withJobCount[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.sql.graft.bridge.drainListenerBus(sc)
+    sc.addSparkListener(counter)
+    try {
+      val out = body
+      org.apache.spark.sql.graft.bridge.drainListenerBus(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(counter)
+  }
 }
 
 class TablesSpec extends SparkSpec {
