@@ -29,9 +29,17 @@ import org.apache.spark.sql.types._
 object Renest {
 
   /** Rebuild documents with the original `schema` from the per-path typed
-    * tables produced by [[Shred.shredTyped]]. */
+    * tables produced by [[Shred.shredTyped]].
+    *
+    * A search hands each path in cut to its hits, as a left-semi join on
+    * `__rootKey` against the hit set. Where that hit set is driver-local
+    * ([[Search.hasChild]]), each input's semi-join becomes an `InSet` on
+    * `__rootKey` ([[DriverLocal.keyCut]]), which Catalyst pushes through
+    * the path's explode into its cache scan: only hit documents are
+    * exploded and assembled, and the hit set is never broadcast. */
   def apply(typed: Map[String, DataFrame], schema: StructType): DataFrame =
-    build(typed, schema, "").select(col("__doc.*"))
+    build(typed.map { case (path, nodes) => path -> DriverLocal.keyCut(nodes) }, schema, "")
+      .select(col("__doc.*"))
 
   private def joinPath(path: String, field: String): String =
     if (path.isEmpty) field else s"$path.$field"

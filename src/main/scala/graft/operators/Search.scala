@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** P1–P10 — the reference's search surface re-expressed as joins/filters.
   *
@@ -69,34 +70,52 @@ object Search {
     * otherwise BE the hot key. SkewSpec pins shape and output.
     *
     * Two paths return the same rows under the same schema:
-    *  - driver-local: when both inputs are in memory and the parents'
+    *  - driver-local: when both inputs are in memory (local rows or loaded
+    *    caches), both keys are default-collation strings and the parents'
     *    size (exact: a loaded cache reports its materialized bytes) is
-    *    within the broadcast budget ([[DriverLocal]]), the semi-join runs
-    *    once, here, and its rows come back as a `LocalRelation`. A search
-    *    that semi-joins every node path against the hit set (the
-    *    `doc_read` search, `p10_search_renest`) then broadcasts one
-    *    `LocalTableScan` instead of re-running this subtree once per path:
-    *    under AQE no exchange above a cached relation is reused
-    *    (`TableCacheQueryStageExec` has no `doCanonicalize`). That
-    *    broadcast is not free: `BroadcastExchangeExec` collects its child
-    *    through `executeCollectIterator`, which `LocalTableScanExec` does
-    *    not override, so it runs one job, shared by every path of the
-    *    query. Measured on Spark 4.1.2 over loaded node caches, a search
-    *    runs 6 jobs: 3 here (the child-key aggregate's shuffle map stage,
-    *    the broadcast of its distinct keys, the semi-join's collect) and 3
-    *    in the renest's collect (the hit-set broadcast, the renest's
-    *    shuffle map stage, its result stage).
-    *  - lazy: any other input gets the plan itself. */
+    *    within the broadcast budget ([[DriverLocal]]), the hit set is
+    *    computed here in two jobs with no exchange: one collects the
+    *    filtered child keys (within the budget; de-duplicated on the
+    *    driver, so no aggregate runs), and one collects the parents cut by
+    *    an `InSet` on their key ([[DriverLocal.keyCut]]). The rows come back
+    *    as a `LocalRelation`, so a search that semi-joins every node path
+    *    against the hit set (the `doc_read` search, `p10_search_renest`)
+    *    has [[Renest]] cut each path by the same `InSet` instead of
+    *    re-running this subtree once per path (under AQE no exchange above
+    *    a cached relation is reused: `TableCacheQueryStageExec` has no
+    *    `doCanonicalize`) or broadcasting the hit set (a
+    *    `BroadcastExchange` over a `LocalTableScan` runs a job of its own:
+    *    `LocalTableScanExec` does not override `executeCollectIterator`).
+    *    Counted with a listener over loaded node caches on Spark 4.1.2, a
+    *    search then runs 4 jobs, down from 6: these 2, and 2 in the
+    *    renest's collect, the broadcast of the `lineitems.part` path (the
+    *    build side of the renest's LeftOuter join) and the result stage.
+    *    That holds at sf0.001 under both the test session's 10 MB budget
+    *    and the perfbench session's 64 MB one; the traced perfbench
+    *    `doc_read` (20k documents, 64 MB) counts 4 per search as well.
+    *  - lazy: any other input gets the plan itself (the child-key
+    *    aggregate and the semi-join, run within the caller's plan), and so
+    *    does a driver-local run that passes the budget. */
   def hasChild(parents: DataFrame, filteredChildren: DataFrame,
                parentKey: String, childParentKey: String): DataFrame = {
     val childKeys = filteredChildren
       .select(col(childParentKey))
       .where(col(childParentKey).isNotNull)
-      .distinct()
-    val semi = parents.alias("__p").join(childKeys.alias("__c"),
+    val aliased = parents.alias("__p")
+    def semiJoin(keys: DataFrame) = aliased.join(keys.alias("__c"),
       col(s"__p.$parentKey") === col(s"__c.$childParentKey"), "left_semi")
-    // a semi-join's size estimate is its parents'
-    DriverLocal.relation(semi, semi.queryExecution.optimizedPlan.stats.sizeInBytes).getOrElse(semi)
+    // a semi-join's size estimate is its parents', read off a plan of its
+    // own: a memoized parents frame keeps the estimate it was planned with
+    val bytes = aliased.queryExecution.optimizedPlan.stats.sizeInBytes
+    val strings = parents.schema.find(_.name == parentKey).exists(_.dataType == StringType) &&
+      childKeys.schema.head.dataType == StringType
+    val local = if (!strings || !DriverLocal.inMemory(aliased)) None else for {
+      keys <- DriverLocal.rows(childKeys, bytes)
+      distinct = DriverLocal.frame(parents.sparkSession, childKeys.schema,
+        keys.distinctBy(_.getUTF8String(0)))
+      hits <- DriverLocal.relation(DriverLocal.keyCut(semiJoin(distinct)), bytes)
+    } yield hits
+    local.getOrElse(semiJoin(childKeys.distinct()))
   }
 
   /** P6 — `has_parent` (the reference *attempted* this and kept the failed

@@ -474,8 +474,10 @@ class PlanAuditSpec extends SparkSpec {
     // and still trips it
     "j4_subtree_counts" -> 8,
     // p10: j4 fills the shared node cache earlier in the sweep, so the
-    // has_child hit set is collected driver-local and its stages run
-    // outside this plan; the 2 are the renest's own
+    // has_child hit set is collected driver-local and its jobs run
+    // outside this plan; the renest plans no exchange of its own, and the
+    // 2 are printed inside its cached relations' plans (the documents'
+    // assembly, the node cache's __rootKey repartition)
     "p10_search_renest" -> 2,
     // pagerank: edge-artifact build + degree agg + (join, agg) per
     // iteration at 3 iterations — 2·iters + setup

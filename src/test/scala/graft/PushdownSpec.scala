@@ -25,14 +25,13 @@ class PushdownSpec extends SparkSpec {
 
   /** Every node of a finalized adaptive plan, query stages and reused
     * exchanges included. */
-  private def allNodes(p: SparkPlan): Seq[SparkPlan] = {
-    val kids = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case s: QueryStageExec => Seq(s.plan)
-      case r: ReusedExchangeExec => Seq(r.child)
-      case other => other.children
-    }
-    p +: kids.flatMap(allNodes)
+  private def allNodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(allNodes)
+
+  private def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case s: QueryStageExec => Seq(s.plan)
+    case r: ReusedExchangeExec => Seq(r.child)
+    case other => other.children
   }
 
   test("P1 conjunctive equality pushes both predicates into the scan") {
@@ -67,101 +66,109 @@ class PushdownSpec extends SparkSpec {
       childScan.get.metadata("PushedFilters"))
   }
 
-  test("P10 filters before assembling: every collect_list aggregate has the semi-join upstream") {
-    import org.apache.spark.sql.catalyst.plans.LeftSemi
-    import org.apache.spark.sql.execution.joins.BaseJoinExec
-    val q = SparkEntry.queries("p10_search_renest")(spark, sf)
-    q.collect() // finalize the adaptive plan before walking it
-    val aggs = allNodes(q.queryExecution.executedPlan).filter(n =>
-      n.expressions.exists(_.exists(
-        _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.aggregate.CollectList])))
-    assert(aggs.nonEmpty, "expected collect_list aggregates in the renest plan")
-    aggs.foreach { a =>
-      assert(allNodes(a).drop(1).exists {
-        case j: BaseJoinExec => j.joinType == LeftSemi
-        case _ => false
-      }, s"collect_list aggregate assembles unfiltered input (no semi-join below it):\n$a")
+  /** Every collect_list aggregate of `plan`. */
+  private def collectLists(plan: SparkPlan): Seq[SparkPlan] =
+    allNodes(plan).filter(n => n.expressions.exists(_.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.aggregate.CollectList])))
+
+  /** `n` filters on an `InSet` over `__rootKey`: a filter node, or a cache
+    * scan's own predicates. */
+  private def rootKeyCut(n: SparkPlan): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.InSet
+    val conds = n match {
+      case f: org.apache.spark.sql.execution.FilterExec => Seq(f.condition)
+      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s.predicates
+      case _ => Nil
     }
+    conds.exists(_.exists {
+      case i: InSet => i.child.references.exists(_.name == "__rootKey")
+      case _ => false
+    })
   }
 
-  test("P10 computes the hit set once: every node path semi-joins a driver-local build") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+  test("P10 filters before assembling: every collect_list aggregate has the hit-set cut upstream") {
+    // the cut is a semi-join on the hit roots (the lazy hit set) or an
+    // InSet on __rootKey (a driver-local one)
     import org.apache.spark.sql.catalyst.plans.LeftSemi
-    import org.apache.spark.sql.execution.{LocalTableScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    def check(pass: String): Unit = {
+      val q = SparkEntry.queries("p10_search_renest")(spark, sf)
+      q.collect() // finalize the adaptive plan before walking it
+      val aggs = collectLists(q.queryExecution.executedPlan)
+      assert(aggs.nonEmpty, s"$pass: expected collect_list aggregates in the renest plan")
+      aggs.foreach { a =>
+        assert(allNodes(a).drop(1).exists {
+          case j: BaseJoinExec => j.joinType == LeftSemi
+          case n => rootKeyCut(n)
+        }, s"$pass: collect_list aggregate assembles unfiltered input (no hit-set cut below it):\n$a")
+      }
+    }
+    // a first search may plan over an unfilled node cache (the lazy cut);
+    // it fills the cache, so the second plans over a loaded one
+    check("first")
+    check("second")
+  }
+
+  test("P10 computes the hit set once: 4 scan-only jobs, each node path cut by an InSet below its explode") {
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.{GenerateExec, LocalTableScanExec, QueryExecution}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.{ShuffleExchangeExec, ShuffleExchangeLike}
-    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.util.QueryExecutionListener
     import scala.collection.mutable
-    // every plan the search executes (the hit-set probe included), and
-    // the stages that ran, with the job that first listed each
+    // every plan the search executes (the hit set's collects included)
     val executed = mutable.Buffer[QueryExecution]()
-    val stageJob = mutable.Map[Int, Int]()
-    val ranStages = mutable.Buffer[(Int, Set[Int])]() // (stage id, its RDD ids)
     val qel = new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = synchronized(executed += qe)
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    val sl = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
-        j.stageIds.foreach(stageJob.getOrElseUpdate(_, j.jobId))
-      }
-      override def onStageCompleted(c: SparkListenerStageCompleted): Unit = synchronized {
-        ranStages += ((c.stageInfo.stageId, c.stageInfo.rddInfos.map(_.id).toSet))
-      }
+    // root-to-leaf node paths of `p` that end in a cache scan
+    def scanPaths(p: SparkPlan): Seq[List[SparkPlan]] = p match {
+      case s: InMemoryTableScanExec => Seq(List(s))
+      case _ => kids(p).flatMap(scanPaths).map(p :: _)
     }
-    // the child-key aggregate is the one grouping on the child's parent
-    // key alone with no aggregate function (the renest's collect_lists
-    // group on it too, with one); its map stage is the one computing the
-    // exchange's input RDD
-    def childKeyMapRdds(p: SparkPlan): Set[Int] = allNodes(p).collect {
-      case e: ShuffleExchangeExec if allNodes(e.child).exists {
-        case a: BaseAggregateExec => a.aggregateExpressions.isEmpty &&
-          a.groupingExpressions.flatMap(_.references.map(_.name)) == Seq("__parentKey")
-        case _ => false
-      } => e.shuffleDependency.rdd.id
-    }.toSet
-    def search(): (org.apache.spark.sql.DataFrame, Int) = {
-      bridge.drainListenerBus(spark.sparkContext)
-      synchronized { executed.clear(); ranStages.clear() }
-      val q = SparkEntry.queries("p10_search_renest")(spark, sf)
-      assert(q.collect().nonEmpty)
-      bridge.drainListenerBus(spark.sparkContext)
-      synchronized {
-        val rdds = executed.toSeq.flatMap(qe => childKeyMapRdds(qe.executedPlan)).toSet
-        assert(rdds.nonEmpty, "no executed plan aggregated the child keys")
-        (q, ranStages.collect { case (st, ids) if (ids & rdds).nonEmpty => stageJob(st) }
-          .distinct.size)
-      }
-    }
+    // the first search fills the node cache; the next three are pinned,
+    // the last under the perfbench session's 64 MB broadcast budget
+    SparkEntry.queries("p10_search_renest")(spark, sf).collect()
     spark.listenerManager.register(qel)
-    spark.sparkContext.addSparkListener(sl)
-    try {
-      val paths = graft.operators.Shred.shredTyped(
-        graft.sources.StarDocs.docs(spark, sf)).size
-      // the hit set is driver-local once the node cache is filled: a
-      // first search fills it, the next two are pinned
-      search()
-      Seq("first", "second").foreach { pass =>
-        val (q, jobs) = search()
-        val plan = q.queryExecution.executedPlan
-        val semis = allNodes(plan).collect { case j: BaseJoinExec if j.joinType == LeftSemi => j }
-        assert(semis.size == paths, s"$pass: expected one semi-join per node path:\n$plan")
-        semis.foreach { j =>
-          assert(j.isInstanceOf[BroadcastHashJoinExec], s"$pass: not a broadcast semi-join:\n$j")
-          val build = allNodes(j.right)
-          assert(build.exists(_.isInstanceOf[LocalTableScanExec]) &&
-            !build.exists(n => n.isInstanceOf[InMemoryTableScanExec] ||
-              n.isInstanceOf[ShuffleExchangeLike]),
-            s"$pass: the hit-set build side is not driver-local:\n$j")
+    val budget = "spark.sql.autoBroadcastJoinThreshold"
+    try Seq("first" -> "10MB", "second" -> "10MB", "64 MB budget" -> "64MB").foreach { case (pass, b) =>
+      bridge.drainListenerBus(spark.sparkContext)
+      synchronized(executed.clear())
+      val (q, jobs) = withSQLConf(budget -> b) {
+        withJobCount {
+          val q = SparkEntry.queries("p10_search_renest")(spark, sf)
+          assert(q.collect().nonEmpty)
+          q
         }
-        assert(jobs == 1, s"$pass: the child-key aggregate ran in $jobs jobs")
       }
-    } finally {
-      spark.sparkContext.removeSparkListener(sl)
-      spark.listenerManager.unregister(qel)
-    }
+      bridge.drainListenerBus(spark.sparkContext)
+      assert(jobs == 4, s"$pass: the search ran $jobs jobs")
+      val plans = synchronized(executed.toSeq).map(_.executedPlan)
+      assert(plans.size == 3, s"$pass: ${plans.size} executed plans (child keys, hit set, renest)")
+      plans.flatMap(allNodes).foreach {
+        case a: BaseAggregateExec =>
+          assert(!(a.aggregateExpressions.isEmpty &&
+            a.groupingExpressions.flatMap(_.references.map(_.name)) == Seq("__parentKey")),
+            s"$pass: the child keys were aggregated:\n$a")
+        case j: BaseJoinExec =>
+          assert(j.joinType != LeftSemi, s"$pass: a left-semi join ran:\n$j")
+        case b: BroadcastExchangeExec =>
+          assert(!allNodes(b).exists(_.isInstanceOf[LocalTableScanExec]),
+            s"$pass: a driver-local relation was broadcast:\n$b")
+        case _ => ()
+      }
+      val aggs = collectLists(q.queryExecution.executedPlan)
+      assert(aggs.nonEmpty, s"$pass: expected collect_list aggregates in the renest plan")
+      aggs.flatMap(scanPaths).foreach { path =>
+        val explode = path.lastIndexWhere(_.isInstanceOf[GenerateExec])
+        assert(explode >= 0 && path.drop(explode + 1).exists(rootKeyCut),
+          s"$pass: a cache scan under a collect_list is not cut by an InSet on __rootKey " +
+            s"below its explode:\n${path.head}")
+      }
+    } finally spark.listenerManager.unregister(qel)
   }
 
   test("ETag point read cuts the store to the requested key below every exchange") {

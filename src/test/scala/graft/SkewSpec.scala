@@ -269,8 +269,9 @@ class SkewSpec extends SparkSpec {
 
   test("has_child returns the same rows driver-local and distributed") {
     // the driver-local path (in-memory inputs within the broadcast
-    // budget) collects the semi-join once and returns a LocalRelation;
-    // every other input keeps the lazy plan. Both must agree row for row
+    // budget, string keys) collects the child keys, then the InSet-cut
+    // parents, in 2 jobs and returns a LocalRelation; every other input
+    // keeps the lazy plan. Both must agree row for row
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation, LogicalPlan}
     import org.apache.spark.sql.execution.datasources.LogicalRelation
@@ -281,19 +282,22 @@ class SkewSpec extends SparkSpec {
     // duplicated keys, null keys, a key with no parent
     val children = Seq[(String, Double)](("a", 5.0), ("a", 6.0), ("a", 7.0),
       (null, 9.0), ("c", 8.0), ("z", 9.0), (null, 1.0)).toDF("cpk", "x")
-    def run(budget: String, p: DataFrame, c: DataFrame): (LogicalPlan, Seq[(String, Int)]) =
+    def run(budget: String, p: DataFrame, c: DataFrame): (LogicalPlan, Seq[(String, Int)], Int) =
       withSQLConf(threshold -> budget) {
-        val q = Search.hasChild(p, c, "pk", "cpk")
+        val ((q, rows), jobs) = withJobCount {
+          val q = Search.hasChild(p, c, "pk", "cpk")
+          (q, q.collect().map(r => (r.getString(0), r.getInt(1))).toSeq.sorted)
+        }
         assert(q.schema == p.schema)
-        (q.queryExecution.analyzed,
-          q.collect().map(r => (r.getString(0), r.getInt(1))).toSeq.sorted)
+        (q.queryExecution.analyzed, rows, jobs)
       }
     def isLocal(plan: LogicalPlan) = plan.isInstanceOf[LocalRelation]
     def isLazy(plan: LogicalPlan) = plan.exists(_.isInstanceOf[Join])
     def agree(p: DataFrame, c: DataFrame, want: Seq[(String, Int)]): Unit = {
-      val (local, localRows) = run("10MB", p, c)
-      val (dist, distRows) = run("-1", p, c)
+      val (local, localRows, jobs) = run("10MB", p, c)
+      val (dist, distRows, _) = run("-1", p, c)
       assert(isLocal(local), s"expected a driver-local result:\n$local")
+      assert(jobs == 2, s"the driver-local hit set ran $jobs jobs")
       assert(isLazy(dist), s"expected the lazy semi-join:\n$dist")
       assert(localRows == want && distRows == want, s"$localRows / $distRows, want $want")
     }
@@ -310,12 +314,24 @@ class SkewSpec extends SparkSpec {
       agree(cachedParents, cachedChildren, Seq(("a", 1), ("c", 3), ("e", 5)))
     } finally { cachedParents.unpersist(); cachedChildren.unpersist() }
     // parents over the budget keep the lazy plan
-    val (over, overRows) = run("1", parents, children)
+    val (over, overRows, _) = run("1", parents, children)
     assert(isLazy(over) && overRows == Seq(("a", 1), ("c", 3)), over)
+    // so do child keys whose collected bytes pass the budget, though the
+    // parents fit it: three 2,000-byte keys against 4,096 bytes
+    val bulky = children.union(Seq("x", "y", "w").map(k => (k * 2000, 1.0)).toDF("cpk", "x"))
+    val (bulkyPlan, bulkyRows, _) = run("4096", parents, bulky)
+    assert(isLazy(bulkyPlan) && bulkyRows == Seq(("a", 1), ("c", 3)), bulkyPlan)
+    // a non-string key keeps the lazy plan
+    val longKeys = withSQLConf(threshold -> "10MB") {
+      Search.hasChild(parents.select($"v".cast("long").as("pk"), $"pk".as("name")),
+        Seq(1L, 1L, 3L, 7L).toDF("cpk"), "pk", "cpk")
+    }
+    assert(isLazy(longKeys.queryExecution.analyzed), longKeys.queryExecution.analyzed)
+    assert(longKeys.collect().map(_.getString(1)).sorted.toSeq == Seq("a", "c"))
     // a parquet-backed input keeps the lazy plan and its scan
     val dir = java.nio.file.Files.createTempDirectory("graft_has_child").toString
     parents.write.mode("overwrite").parquet(dir)
-    val (fromFiles, fileRows) = run("10MB", spark.read.parquet(dir), children)
+    val (fromFiles, fileRows, _) = run("10MB", spark.read.parquet(dir), children)
     assert(isLazy(fromFiles) && fromFiles.exists(_.isInstanceOf[LogicalRelation]), fromFiles)
     assert(fileRows == Seq(("a", 1), ("c", 3)))
   }

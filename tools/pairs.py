@@ -16,6 +16,8 @@ with --trace 0), prints parent and change as median [Q1, Q3], the pairs the
 change wins (strictly better in the metric's direction), the median gap
 against the parent's IQR, and whether the claim rule holds: the change wins at
 least 9 of 10 pairs and its median is better by more than the parent's IQR.
+A pair where either side returned wrong answers is excluded from all of this,
+and no claim is met on a set that excluded one.
 Then each run's `steal_pct` (CPU time the hypervisor gave to other guests).
 Every run's result lines are appended to --log, which --report reprints.
 """
@@ -76,9 +78,14 @@ def report(records, out=sys.stdout):
         by_seed.setdefault((r["workload"], r["seed"]), {})[r["side"]] = r
     for workload in sorted({w for w, _ in by_seed}):
         runs = [(s, v) for (w, s), v in sorted(by_seed.items()) if w == workload]
-        ok = [(s, v["parent"], v["change"]) for s, v in runs
-              if all("result" in v.get(side, {}) for side in ("parent", "change"))]
-        print(f"== {workload}: {len(ok)} complete pairs of {len(runs)} seeds", file=out)
+        complete = [(s, v["parent"], v["change"]) for s, v in runs
+                    if all("result" in v.get(side, {}) for side in ("parent", "change"))]
+        # a side with wrong answers measured something else: its pair is
+        # left out, and no claim stands on a set that lost one
+        ok = [t for t in complete if not (t[1]["result"]["failed"] or t[2]["result"]["failed"])]
+        wrong = len(complete) - len(ok)
+        print(f"== {workload}: {len(ok)} complete pairs of {len(runs)} seeds"
+              + (f", {wrong} excluded for wrong answers" if wrong else ""), file=out)
         for s, v in runs:
             for side in ("parent", "change"):
                 r = v.get(side)
@@ -87,7 +94,8 @@ def report(records, out=sys.stdout):
                 elif "error" in r:
                     print(f"   seed {s} {side}: run failed: {r['error']}", file=out)
                 elif r["result"]["failed"]:
-                    print(f"   seed {s} {side}: {r['result']['failed']} wrong answers", file=out)
+                    print(f"   seed {s} {side}: {r['result']['failed']} wrong answers"
+                          + (", pair excluded" if s in {t[0] for t in complete} else ""), file=out)
         if not ok:
             continue
         print(f"   {'metric':<28} {'parent median [Q1, Q3]':<30} {'change median [Q1, Q3]':<30}"
@@ -101,7 +109,7 @@ def report(records, out=sys.stdout):
             cq1, cmed, cq3 = quartiles(cv)
             gap = sign * (pmed - cmed)  # positive: the change is better
             iqr = pq3 - pq1
-            claim = "met" if wins * 10 >= 9 * len(ok) and gap > iqr else "not met"
+            claim = "met" if not wrong and wins * 10 >= 9 * len(ok) and gap > iqr else "not met"
             change = f"{100 * (cmed - pmed) / pmed:+.1f}%" if pmed else ""
             print(f"   {m:<28} {f'{pmed:.4g} [{pq1:.4g}, {pq3:.4g}]':<30}"
                   f" {f'{cmed:.4g} [{cq1:.4g}, {cq3:.4g}]':<30}"
