@@ -2,12 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One sweep over every shared-artifact memo ([[graft.sources.StarDocs]]
-  * documents, [[graft.operators.Shred]] shreds, [[graft.ext.Dedup]]
-  * shingle/signature tables): unpersists the cache entries and drops the
-  * memo keys for `spark`. Call on session teardown — the memos otherwise
-  * hold strong references to DataFrames and their session forever, which
-  * is fine for a batch job but leaks in a long-lived multi-tenant JVM. */
+/** One sweep over every shared-artifact memo for `spark`: every
+  * [[graft.PlanMemo]] relation and [[graft.ModelMemo]] model (through
+  * their registries), then the hand-rolled memos of [[graft.ext.Dedup]]
+  * (shingle/signature/candidate tables), [[graft.ext.InvertedIndex]]
+  * (posting relations), [[graft.ext.Curation]] (Bloom bitmaps),
+  * [[graft.operators.Shred]] (node tables), [[graft.sources.StarDocs]]
+  * (assembled documents) and [[graft.sources.Tables]] (legacy-events
+  * checkpoints). It unpersists the cache entries and drops the memo keys.
+  * Call on session teardown — the memos otherwise hold strong references
+  * to DataFrames and their session forever, which is fine for a batch job
+  * but leaks in a long-lived multi-tenant JVM. */
 object Caches {
   def invalidate(spark: SparkSession): Unit = {
     // every PlanMemo-backed relation memo and ModelMemo-backed learned
@@ -20,7 +25,6 @@ object Caches {
     graft.ext.Curation.invalidate(spark)
     graft.operators.Shred.invalidate(spark)
     graft.sources.StarDocs.invalidate(spark)
-    graft.sources.Io.invalidate(spark)
     graft.sources.Tables.invalidate(spark)
   }
 }

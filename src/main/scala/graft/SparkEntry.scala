@@ -221,6 +221,22 @@ object SparkEntry {
     }
   )
 
+  /** The query names a run selects: `names` trimmed, blanks dropped, and
+    * none left selects every query. An unknown name fails, naming it, so a
+    * typo cannot time or dump zero queries and read as success. */
+  def select(names: Iterable[String]): Set[String] = {
+    val all = queries.keySet
+    val picked = names.map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = picked -- all
+    require(unknown.isEmpty, s"unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
+    if (picked.isEmpty) all else picked
+  }
+
+  /** [[select]] over `SPARK_GRAFT_ONLY`'s comma-separated form (unset or
+    * empty selects every query). */
+  def selectOnly(spec: Option[String]): Set[String] =
+    select(spec.toSeq.flatMap(_.split(",")))
+
   def oracleSql: Map[String, String] =
     SparkEntryExt.oracleSql ++ SparkEntryIdx.oracleSql ++ SparkEntryLay.oracleSql ++
       SparkEntryUni.oracleSql ++ SparkEntryEvt.oracleSql ++ SparkEntryRel.oracleSql ++

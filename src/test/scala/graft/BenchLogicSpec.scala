@@ -100,4 +100,20 @@ class BenchLogicSpec extends AnyFunSuite {
     // a flaky query must never masquerade as a fast one
     assert(Bench.steadyFloor(Seq(5.0, -1.0, 2.1), Some(Seq(3.0, 1.5, 1.6))) == -1.0)
   }
+
+  test("selectOnly: an unknown name fails and the message names it") {
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.selectOnly(Some("j1_shred_counts,j1_shred_cuonts")))
+    assert(e.getMessage.contains("j1_shred_cuonts"), e.getMessage)
+    assert(!e.getMessage.contains("j1_shred_counts"), e.getMessage)
+  }
+
+  test("selectOnly: unset, empty or blank selects every query; names are trimmed") {
+    val all = SparkEntry.queries.keySet
+    assert(SparkEntry.selectOnly(None) == all)
+    assert(SparkEntry.selectOnly(Some("")) == all)
+    assert(SparkEntry.selectOnly(Some(" , ")) == all)
+    assert(SparkEntry.selectOnly(Some(" j1_shred_counts , p10_search_renest ")) ==
+      Set("j1_shred_counts", "p10_search_renest"))
+  }
 }

@@ -89,7 +89,7 @@ class PlanAuditSpec extends SparkSpec {
     * fixed plan, which is all a regression pin needs. The per-family
     * executed-shuffle story lives in SCALE.md's table; this map is its
     * enforcement proxy. Regenerate after an intentional plan change with
-    * `graft.tools.ShowShuffles` (which mirrors TestSpark's config —
+    * `graft.tools.Probe shuffles` (which runs TestSpark's session profile —
     * join strategies depend on it). */
   private val shuffleBudget: Map[String, Int] = Map(
     // J/P: shred + renest over the bucketed NodeStore (big counts =
@@ -243,7 +243,7 @@ class PlanAuditSpec extends SparkSpec {
     // triangle census: the projected-edge artifact's lineage + degree agg
     // + two endpoint-degree joins feeding the wedge/closing joins; the
     // scalar metric rows ride a range(1) — 5 printable exchanges at the
-    // fresh-session state ShowShuffles measures
+    // fresh-session state `Probe shuffles` measures
     "x_triangles" -> 5,
     // episodes: ordered-events window exchange + two (user, position)
     // equi-join shuffles + the bounded top-k rank — the gap expansion
@@ -445,12 +445,9 @@ class PlanAuditSpec extends SparkSpec {
     "x_tokenizer_fertility" -> 7,
   )
 
-  /** a node line whose name starts with "Exchange " is a shuffle;
-    * BroadcastExchange / ReusedExchange node names do not match */
-  private def shuffles(df: org.apache.spark.sql.DataFrame): Int =
-    df.queryExecution.executedPlan.toString.linesIterator.count { l =>
-      l.dropWhile(c => !c.isLetter).startsWith("Exchange ")
-    }
+  // the counting rules live in graft.tools.Probe, which regenerates the
+  // budgets, so the gate and its regenerator cannot count differently
+  import graft.tools.Probe.{executedShuffleStages, shuffles}
 
   test("the shuffle counter sees a deliberate extra repartition") {
     val base = spark.range(100).toDF("id").groupBy("id").count()
@@ -523,23 +520,13 @@ class PlanAuditSpec extends SparkSpec {
     // joins + nk/ek aggs + final join
     "x_rich_club" -> 9)
 
-  /** Distinct shuffle stages of THIS query execution's final adaptive
-    * plan. `collect()` (not `count()`) executes the df's own
-    * QueryExecution, so the inspected plan is the one that ran
-    * (isFinalPlan=true); reused stages share an id and count once. */
-  private def executedShuffleStages(df: org.apache.spark.sql.DataFrame): Int = {
-    df.collect()
-    val s = df.queryExecution.executedPlan.toString
-    raw"ShuffleQueryStage (\d+)".r.findAllMatchIn(s).map(_.group(1)).toSet.size
-  }
-
   test("executed-stage budgets hold for the print-level outliers") {
     Caches.invalidate(spark)
     // memos from OTHER sessions (suites that ran spark.newSession) live
     // in the context-wide CacheManager and would be substituted into
     // this session's plans as InMemoryRelations, changing stage counts
     // run-to-run; clear the shared cache so the measured state is the
-    // same fresh one ShowShuffles measures
+    // same fresh one `Probe stages` measures
     spark.catalog.clearCache()
     val over = executedStageBudget.toSeq.sortBy(_._1).flatMap { case (n, budget) =>
       val c = executedShuffleStages(SparkEntry.queries(n)(spark, sf))
@@ -554,7 +541,7 @@ class PlanAuditSpec extends SparkSpec {
     // start from a clean memo state: printed lineage inside shared
     // artifacts depends on which memo entries already exist, so the sweep
     // pins the SAME deterministic fresh-session-sorted-order plans that
-    // graft.tools.ShowShuffles measures (memos rebuild transparently).
+    // `graft.tools.Probe shuffles` measures (memos rebuild transparently).
     // clearCache additionally drops OTHER sessions' cached relations —
     // the context-wide CacheManager substitutes those into this
     // session's plans too, and which suites ran first must not move the
@@ -567,7 +554,7 @@ class PlanAuditSpec extends SparkSpec {
     val unbudgeted = counts.collect { case (n, _) if !shuffleBudget.contains(n) => n }
     assert(unbudgeted.isEmpty,
       s"queries with no shuffle budget (add one consciously, via " +
-        s"graft.tools.ShowShuffles): $unbudgeted")
+        s"graft.tools.Probe shuffles): $unbudgeted")
     val over = counts.collect {
       case (n, c) if c > shuffleBudget(n) => s"$n: $c shuffles > budget ${shuffleBudget(n)}"
     }

@@ -6,22 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared SparkSession for all suites (one JVM-wide session; suites run
   * sequentially under sbt's forked test JVM). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // routing-key (rootKey) partitioning must satisfy joins keyed on
-      // (parentKey, rootKey) — subset co-partitioning, disabled by default
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.build(GraftSession.test)
   val sf: String = "/root/testdata/sf0.001"
 }
 
